@@ -54,6 +54,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .hashing import md5_long
+from .lm import long_array_lit
 from .quality_model import _bucket, _grams, synth_quality_corpus
 
 #: integer log10 micro-units — matches quality_model / lm
@@ -157,16 +158,6 @@ def dsir_score_py(text: str, wt: DsirWeights) -> tuple[int, int]:
     return len(gs), sum(wt.w[_bucket(g, wt.dim)] for g in gs)
 
 
-def _weights_lit(wt: DsirWeights) -> Column:
-    # one-NODE literal (notes #46 + r8): F.lit(list) would round-trip
-    # py4j per element, and a parsed array(...) leaves dim=4096 Literal
-    # children for every plan's analyzer walk; from_json of one string
-    # constant-folds to the same array literal (see lm._array_lit)
-    return F.from_json(
-        F.lit("[" + ",".join(str(v) for v in wt.w) + "]"), "array<bigint>"
-    )
-
-
 def dsir_logratio_micro(text: Column | str, wt: DsirWeights) -> Column:
     """struct(n_grams long, logratio_micro long) — exact integer log10
     importance ratio of a document, as one native expression. Memoized
@@ -188,7 +179,7 @@ def dsir_logratio_micro(text: Column | str, wt: DsirWeights) -> Column:
 
 
 def _dsir_logratio_micro(c: Column, wt: DsirWeights) -> Column:
-    arr = _weights_lit(wt)
+    arr = long_array_lit(wt.w)
     toks = F.filter(F.split(c, " "), lambda w: w != F.lit(""))
     n1 = F.greatest(F.size(toks) - 1, F.lit(0))
     bigrams = F.zip_with(

@@ -45,6 +45,7 @@ quality gates unnoticed).
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Iterable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -256,7 +257,7 @@ def score_text_py(text: str, lm: StupidBackoffLM) -> tuple[int, int]:
     return len(ws), total
 
 
-def _array_lit(values: tuple[int, ...]) -> Column:
+def long_array_lit(values: Iterable[int]) -> Column:
     """array<long> literal as ONE AST NODE. `F.lit(list)` builds the
     array element-by-element over py4j — 14.8s for the 32k trigram
     table (r6); a parsed `F.expr("array(...)")` builds fast but leaves
@@ -266,9 +267,13 @@ def _array_lit(values: tuple[int, ...]) -> Column:
     guide §1.2/§5). `from_json` of one string literal is a 2-node tree
     that ConstantFolding evaluates to the same array literal before
     execution (verified: optimized plan shows the materialized array;
-    element values bit-identical)."""
+    element values bit-identical). FAILFAST: a malformed or
+    long-overflowing constant raises when the plan is evaluated instead
+    of silently parsing to NULL (which would null every score)."""
     return F.from_json(
-        F.lit("[" + ",".join(str(v) for v in values) + "]"), "array<bigint>"
+        F.lit("[" + ",".join(str(v) for v in values) + "]"),
+        "array<bigint>",
+        {"mode": "FAILFAST"},
     )
 
 
@@ -304,9 +309,9 @@ def lm_logprob_micro(text: Column | str, lm: StupidBackoffLM) -> Column:
 
 def _lm_logprob_micro(c: Column, lm: StupidBackoffLM) -> Column:
     d1, d2, d3 = lm.dims
-    a1 = _array_lit(lm.s1)
-    a2 = _array_lit(lm.s2)
-    a3 = _array_lit(lm.s3)
+    a1 = long_array_lit(lm.s1)
+    a2 = long_array_lit(lm.s2)
+    a3 = long_array_lit(lm.s3)
     alpha = F.lit(ALPHA_MICRO).cast("long")
     oov = F.lit(lm.oov_micro).cast("long")
     zero = F.lit(0).cast("long")

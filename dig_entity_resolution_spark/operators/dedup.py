@@ -187,7 +187,8 @@ def minhash_lsh_dup_pairs(
     # provably injective on the normalize_text alphabet for k ≤ 8, and
     # it deletes the dictionary's explode + join + collect_list
     # re-aggregation (a full corpus-shingle shuffle) from the plan.
-    # Dictionary fallback for k > 8 (pack would overflow a long).
+    # k > 8 (the pack would overflow a long) falls back to the string
+    # verify below.
     if encode_verify and shingle_k <= 8:
         enc = _persist(
             base.select(

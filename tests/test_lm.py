@@ -16,6 +16,7 @@ from dig_entity_resolution_spark.functions.lm import (
     fit_stupid_backoff,
     fit_stupid_backoff_distributed,
     lm_score_docs,
+    long_array_lit,
     score_text_py,
 )
 
@@ -74,6 +75,18 @@ def test_null_text_raises_in_plan(lm, spark):
     docs = spark.createDataFrame([(1, None)], "doc_id long, text string")
     with pytest.raises((SparkRuntimeException, Py4JJavaError)):
         lm_score_docs(docs, lm).collect()
+
+
+def test_malformed_array_literal_raises(spark):
+    """A score-table constant that does not parse as array<bigint> (here a
+    long overflow) must fail the query, not parse to a NULL array that
+    nulls every score (the from_json default PERMISSIVE mode)."""
+    from py4j.protocol import Py4JJavaError
+
+    one = spark.range(1)
+    assert one.select(long_array_lit([1, -2]).alias("a")).first()["a"] == [1, -2]
+    with pytest.raises(Py4JJavaError, match="FAILFAST"):
+        one.select(long_array_lit([1, 2**70]).alias("a")).collect()
 
 
 def test_distributed_fit_equals_serial(lm, spark):

@@ -272,3 +272,97 @@ def test_checkpoint_detects_foreign_file_injection(spark, tmp_path):
     # removing the foreign file restores completeness (stamped set intact)
     os.remove(os.path.join(table, "part-99999-injected-c000.snappy.parquet"))
     assert ck.is_complete("stage_f")
+
+
+def _jobs_launched(spark, group, fn):
+    """Number of Spark jobs `fn()` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_checkpoint_lineage_launches_no_spark_jobs(spark, tmp_path):
+    """Lineage is stamped on the driver from the Parquet footers: a
+    checkpoint write launches no more Spark jobs than a plain write plus
+    read-back of the same frame, and the is_complete / counters probes
+    that resume and every streaming micro-batch pay launch none."""
+    ck = ParquetCheckpoint(spark, str(tmp_path), "jobs")
+    df = spark.range(100).repartition(4)
+    ck.write("warm", df)  # first-use planning jobs stay out of the count
+    plain = str(tmp_path / "plain")
+    n_plain = _jobs_launched(
+        spark,
+        f"plain-{tmp_path.name}",
+        lambda: (df.write.parquet(plain), spark.read.parquet(plain)),
+    )
+    n_ck = _jobs_launched(spark, f"ck-{tmp_path.name}", lambda: ck.write("s", df))
+    assert n_ck <= n_plain, (n_ck, n_plain)
+
+    def probe():
+        ck.is_complete("s")
+        ck.counters()
+
+    assert _jobs_launched(spark, f"probe-{tmp_path.name}", probe) == 0
+    assert ck.is_complete("s") and ck.counters() == {"s": 100, "warm": 100}
+
+
+def test_checkpoint_meta_compatible_with_spark_layout(spark, tmp_path):
+    """_meta written by older runs (Spark, possibly multi-part, INT96 `ts`)
+    and by the driver-side writer must share one schema: perfbench reads
+    every stage's meta dir in ONE spark.read.parquet call, and an old
+    warehouse must still resume (is_complete / counters / lineage)."""
+    ck = ParquetCheckpoint(spark, str(tmp_path), "compat")
+    df = spark.range(30).withColumnRenamed("id", "record_id").repartition(3)
+    ck.write("new", df)
+    ck.write("old", df)
+    old_rows = [r[:-1] for r in ck.lineage("old").collect()]  # drop ts
+    spark.createDataFrame(
+        old_rows,
+        "stage string, run_id string, partition_id int, file string, "
+        "rows_out long, total_rows long, bytes long",
+    ).withColumn("ts", F.current_timestamp()).repartition(2).write.mode(
+        "overwrite"
+    ).parquet(ck.meta_path("old"))
+    schema = (
+        "struct<stage:string,run_id:string,partition_id:int,file:string,"
+        "rows_out:bigint,total_rows:bigint,bytes:bigint,ts:timestamp>"
+    )
+    assert ck.lineage("new").schema.simpleString() == schema
+    assert ck.lineage("old").schema.simpleString() == schema
+    for order in (("new", "old"), ("old", "new")):
+        both = spark.read.parquet(*[ck.meta_path(s) for s in order])
+        assert both.schema.simpleString() == schema
+        got = both.groupBy("stage").agg(F.sum("rows_out"), F.count("ts")).collect()
+        assert sorted(tuple(r) for r in got) == [("new", 30, 3), ("old", 30, 3)]
+    assert ck.is_complete("old") and ck.is_complete("new")
+    assert ck.counters() == {"new": 30, "old": 30}
+
+
+def test_checkpoint_remote_branch_lineage_matches_footers(spark, tmp_path, monkeypatch):
+    """A table the driver cannot list (remote scheme) is counted with an
+    input_file_name() scan and its _meta written by Spark. Emulated on a
+    local dir: the scan's per-file rows must equal the Parquet footers the
+    local branch stamps, in the same _meta schema."""
+    import pyarrow.parquet as pq
+
+    from dig_entity_resolution_spark.plans import checkpoint as ckmod
+
+    ck = ParquetCheckpoint(spark, str(tmp_path), "rm")
+    df = spark.range(100).withColumnRenamed("id", "record_id").repartition(4)
+    ck.write("local", df)
+    with monkeypatch.context() as m:
+        m.setattr(ckmod, "_list_data_files", lambda _path: None)
+        m.setattr(ckmod, "_local_path", lambda _uri: None)
+        ck.write("remote", df)
+    lin = ck.lineage("remote")
+    assert lin.schema == ck.lineage("local").schema
+    rows = lin.collect()
+    assert sum(r["rows_out"] for r in rows) == 100
+    for r in rows:
+        path = ckmod._local_path(r["file"])
+        assert pq.read_metadata(path).num_rows == r["rows_out"], r["file"]
+    assert ck.is_complete("remote")

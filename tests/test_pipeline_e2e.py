@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from dig_entity_resolution_spark.plans.pipeline import ERConfig, ERPipeline
+from dig_entity_resolution_spark.plans.pipeline import STAGES, ERConfig, ERPipeline
 from dig_entity_resolution_spark.synth import generate_corpus
 
 
@@ -28,6 +28,11 @@ def test_e2e_f1(spark, corpus, tmp_path):
     # every page got exactly one cluster assignment
     assert clusters.count() == pages.count()
     assert clusters.select("record_id").distinct().count() == pages.count()
+    # footer-stamped lineage agrees with the tables it describes
+    counters = pipe.ckpt.counters()
+    assert set(STAGES) <= set(counters)
+    for stage, rows_out in counters.items():
+        assert rows_out == pipe.ckpt.read(stage).count(), stage
 
 
 def test_resume_identical_and_no_recompute(spark, corpus, tmp_path):
